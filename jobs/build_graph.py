@@ -43,23 +43,12 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from riksdagen_sentences_spark.plans import materialize as M
     from riksdagen_sentences_spark.plans import pipeline as P
+    from riksdagen_sentences_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.appName("build-sentence-graph")
-        # cluster-agnostic defaults; real deployments override via
-        # spark-submit --conf (AQE coalescing right-sizes the shuffle
-        # partition count at runtime)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    # the engine's portable settings; spark-submit supplies the master
+    spark = session_builder("build-sentence-graph").getOrCreate()
     files = spark.read.parquet(args.input)
     if args.max_documents:
         files = files.limit(args.max_documents)

@@ -73,20 +73,13 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from riksdagen_sentences_spark.plans.curate import curation_stages
+    from riksdagen_sentences_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.appName("curate-corpus")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    # the engine's portable settings; spark-submit supplies the master
+    spark = session_builder("curate-corpus").getOrCreate()
     docs = spark.read.parquet(args.input)
     bench = (
         spark.read.parquet(args.benchmark) if args.benchmark else None

@@ -43,18 +43,12 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from riksdagen_sentences_spark.operators.rdf import to_ntriples
     from riksdagen_sentences_spark.semantics import PRED_HAS_TEXT
+    from riksdagen_sentences_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.appName("export-ntriples")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    # the engine's portable settings; spark-submit supplies the master
+    spark = session_builder("export-ntriples").getOrCreate()
     if args.triples:
         triples = spark.read.parquet(args.triples)
     else:

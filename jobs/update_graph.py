@@ -53,19 +53,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from riksdagen_sentences_spark.plans import delta as D
+    from riksdagen_sentences_spark.session import session_builder
 
-    spark = (
-        SparkSession.builder.appName("update-sentence-graph")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    # the engine's portable settings; spark-submit supplies the master
+    spark = session_builder("update-sentence-graph").getOrCreate()
 
     batch = spark.read.parquet(args.input)
     report: dict = D.update_graph(spark, args.store, batch)

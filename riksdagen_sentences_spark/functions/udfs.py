@@ -8,42 +8,18 @@ per batch, never per row.
 
 Everything that IS expressible as a built-in column expression lives in
 ``columns.py`` instead - UDFs are the slow path and are reserved for the
-genuinely imperative kernels (chunk-backtracking sentenizer, gazetteer
-matcher, language scorer).
+genuinely imperative kernels: the chunk-backtracking sentenizer (only
+for documents over CHUNK_SIZE) and HTML-to-text conversion.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, StringType
 
-from ..kernels import langid as K_langid
-from ..kernels import ner as K_ner
 from ..kernels import sentenize as K_sentenize
 from ..kernels import text as K_text
-
-LANG_SCORE_TYPE = StructType(
-    [
-        StructField("lang", StringType()),
-        StructField("score", DoubleType()),
-    ]
-)
-
-ENTITY_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("label", StringType()),
-            StructField("ner_label", StringType()),
-        ]
-    )
-)
 
 
 @F.pandas_udf(ArrayType(StringType()))
@@ -52,27 +28,6 @@ def _sentenize_udf(content: pd.Series) -> pd.Series:
     boundary split; reference models/document.py:86-200)."""
     return content.apply(
         lambda t: K_sentenize.sentenize_document(t) if t is not None else []
-    )
-
-
-@F.pandas_udf(LANG_SCORE_TYPE)
-def _langid_udf(cleaned: pd.Series) -> pd.DataFrame:
-    """cleaned sentence -> (lang, score) struct (replaces fasttext,
-    reference models/sentence.py:193-209)."""
-    pairs = [
-        K_langid.detect_language(c) if c is not None else ("und", 0.0)
-        for c in cleaned
-    ]
-    return pd.DataFrame(pairs, columns=["lang", "score"], index=cleaned.index)
-
-
-@F.pandas_udf(ENTITY_TYPE)
-def _ner_udf(cleaned: pd.Series) -> pd.Series:
-    """cleaned sentence -> unique (label, ner_label) mentions from the
-    broadcast gazetteer (replaces spaCy doc.ents,
-    reference models/entities.py:21-27)."""
-    return cleaned.apply(
-        lambda c: K_ner.extract_entities(c) if c is not None else []
     )
 
 
@@ -85,10 +40,8 @@ def _html_to_text_udf(html: pd.Series) -> pd.Series:
 # All kernels ARE deterministic, but we register them as nondeterministic
 # on purpose: it stops Catalyst from duplicating the Python call when a
 # filter on the UDF's output is pushed through the defining projection
-# (observed: langid_udf evaluated TWICE per row - one ArrowEvalPython for
-# the pushed filter, another for the output columns).  One Python pass
+# (observed: a langid UDF evaluated TWICE per row - one ArrowEvalPython
+# for the pushed filter, another for the output columns).  One Python pass
 # per batch is worth more than filter pushdown into the Arrow channel.
 sentenize_udf = _sentenize_udf.asNondeterministic()
-langid_udf = _langid_udf.asNondeterministic()
-ner_udf = _ner_udf.asNondeterministic()
 html_to_text_udf = _html_to_text_udf.asNondeterministic()

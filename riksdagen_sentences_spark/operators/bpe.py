@@ -77,7 +77,8 @@ def learn_bpe(
     docs: DataFrame, n_merges: int = 3, text_col: str = "text"
 ) -> DataFrame:
     """(round, w1, w2, merged, freq) - the first ``n_merges`` BPE merge
-    rules learned from the corpus, in order.
+    rules learned from the corpus, in order; fewer (possibly none) when
+    the corpus runs out of adjacent symbol pairs first.
 
     Scale shape: after the one corpus pass in :func:`word_frequency`,
     every round touches only the vocabulary table - explode to pairs,
@@ -111,6 +112,10 @@ def learn_bpe(
             .limit(1)
             .first()
         )
+        if best is None:
+            # no adjacent symbol pair left (empty corpus, only 1-char
+            # words, or every word fully merged): no further rule exists
+            break
         w1, w2 = best["w1"], best["w2"]
         rows.append((r, w1, w2, w1 + w2, int(best["freq"])))
         seq = F.replace(
@@ -122,22 +127,25 @@ def learn_bpe(
     # createDataFrame-backed frame would pay a Python-runner stage per
     # downstream action
     spark = docs.sparkSession
-    return spark.range(1).select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("int").alias("round"),
-                        F.lit(a).alias("w1"),
-                        F.lit(b).alias("w2"),
-                        F.lit(m).alias("merged"),
-                        F.lit(f).cast("bigint").alias("freq"),
-                    )
-                    for r, a, b, m, f in rows
-                ]
+    rules = F.array(
+        *[
+            F.struct(
+                F.lit(r).cast("int").alias("round"),
+                F.lit(a).alias("w1"),
+                F.lit(b).alias("w2"),
+                F.lit(m).alias("merged"),
+                F.lit(f).cast("bigint").alias("freq"),
             )
-        )
+            for r, a, b, m, f in rows
+        ]
     )
+    if not rows:
+        # an untyped empty array cannot be inlined into the rule schema
+        rules = rules.cast(
+            "array<struct<round:int,w1:string,w2:string,merged:string,"
+            "freq:bigint>>"
+        )
+    return spark.range(1).select(F.inline(rules))
 
 
 def segment_words(

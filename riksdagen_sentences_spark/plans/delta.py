@@ -178,19 +178,20 @@ def _write_commit(
 
 
 def gazetteer_fingerprint(gazetteer: DataFrame | None) -> str:
-    """Order-independent sha256 of the NER dictionary (gazetteers are
-    broadcast-sized by the matcher's own contract, so the driver-side
-    collect is bounded).  ``update_graph`` pins this across batches:
-    skeletons computed under different dictionaries would disagree with
-    a from-scratch build, silently, only for contents that happened to
-    arrive under the wrong dictionary."""
+    """Order-independent sha256 of the NER dictionary's (term,
+    ner_label) rows - the columns pipeline.mention_rows reads
+    (gazetteers are broadcast-sized by the matcher's own contract, so
+    the driver-side collect is bounded).  ``update_graph`` pins this
+    across batches: skeletons computed under different dictionaries
+    would disagree with a from-scratch build, silently, only for
+    contents that happened to arrive under the wrong dictionary."""
     import hashlib
 
     if gazetteer is None:
         return "default-dict"
     rows = sorted(
-        f"{r['label']}\x00{r['ner_label']}"
-        for r in gazetteer.select("label", "ner_label").collect()
+        f"{r['term']}\x00{r['ner_label']}"
+        for r in gazetteer.select("term", "ner_label").collect()
     )
     return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:32]
 

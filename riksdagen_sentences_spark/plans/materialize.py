@@ -31,24 +31,16 @@ TABLES = ("sentences", "rawtokens", "normtokens", "entities", "triples")
 def build_all_tables(
     spark: SparkSession, docs: DataFrame
 ) -> dict[str, DataFrame]:
-    base = P.sentence_base(docs).persist()
-    sents = P.sentences(base).persist()
-    toks = P.token_base(base).persist()
-    mentions = P.mention_rows(sents)  # one gazetteer-UDF pass
-    triples = (
-        P.part_of_edges(sents)
-        .unionByName(P.has_text_edges(sents))
-        .unionByName(P.occurs_in_edges(toks))
-        .unionByName(P.normalizes_to_edges(toks))
-        .unionByName(P.mention_edges(sents, mentions))
-        .unionByName(P.links_to_edges(toks, spark))
-    )
+    """The five graph tables, all read from ``pipeline.graph_frames``:
+    ``triples`` is exactly ``pipeline.triples``' plan, and the canonical
+    tables derive from the same persisted cut-points and NER pass."""
+    g = P.graph_frames(spark, docs)
     return {
-        "sentences": sents,
-        "rawtokens": P.rawtokens(toks),
-        "normtokens": P.normtokens(toks),
-        "entities": P.entities(sents, mentions),
-        "triples": triples,
+        "sentences": g["sentences"],
+        "rawtokens": P.rawtokens(g["tokens"]),
+        "normtokens": P.normtokens(g["tokens"]),
+        "entities": P.entities(g["sentences"], g["mentions"]),
+        "triples": g["triples"],
     }
 
 

@@ -13,13 +13,14 @@ Stage map (reference file:line in each function's docstring):
         ├─► token_base (JVM tokenizer + POS + accept filter)
         │      ├─► rawtokens / normtokens (salted dedup)
         │      └─► occursIn / normalizesTo / linksTo edges
-        ├─► entities + mentions edges (gazetteer pandas UDF)
+        ├─► entities + mentions edges (JVM gazetteer matcher)
         └─► triples = union of all edges
 
-Only two operators run Python by default (Arrow-batched pandas UDFs):
-the sentenizer and the gazetteer NER - everything else, including
-language detection, is whole-stage-codegen column expressions (the
-langid pandas UDF remains available and bit-identical).
+One code path per stage.  The only Python in the graph build is the
+sentenize pandas UDF on the >CHUNK_SIZE branch of :func:`sentence_rows`
+(chunk backtracking has no column form); language detection, cleaning,
+tokenization, POS and NER are whole-stage-codegen column expressions.
+The pure-Python kernels (kernels/) are their row-at-a-time oracle.
 """
 
 from __future__ import annotations
@@ -69,9 +70,7 @@ def docs_from_documents(documents: DataFrame) -> DataFrame:
     )
 
 
-def sentence_rows(
-    docs: DataFrame, use_udf_sentenize: bool = False
-) -> DataFrame:
+def sentence_rows(docs: DataFrame) -> DataFrame:
     """documents -> (document_id, sent_idx, text), one row per sentence.
 
     Length-gated execution: documents <= CHUNK_SIZE chars (all but the
@@ -87,13 +86,8 @@ def sentence_rows(
     Both branches implement kernels/sentenize.sentenize_document exactly
     (for <=CHUNK_SIZE input, chunk_text is the identity, so the kernel
     reduces to split_sentences(clean_toc(text))); equality is pinned by
-    tests and the driver oracle.
+    tests against the kernel and by the driver oracle.
     """
-    udf_sent = F.posexplode(U.sentenize_udf(F.col("content"))).alias(
-        "sent_idx", "text"
-    )
-    if use_udf_sentenize:
-        return docs.select("document_id", udf_sent)
     small = docs.filter(F.length("content") <= S.CHUNK_SIZE).select(
         "document_id",
         F.posexplode(
@@ -101,16 +95,15 @@ def sentence_rows(
         ).alias("sent_idx", "text"),
     )
     big = docs.filter(F.length("content") > S.CHUNK_SIZE).select(
-        "document_id", udf_sent
+        "document_id",
+        F.posexplode(U.sentenize_udf(F.col("content"))).alias(
+            "sent_idx", "text"
+        ),
     )
     return small.unionByName(big)
 
 
-def sentence_base(
-    docs: DataFrame,
-    use_udf_langid: bool = False,
-    use_udf_sentenize: bool = False,
-) -> DataFrame:
+def sentence_base(docs: DataFrame) -> DataFrame:
     """documents -> one row per detected sentence with cleaning + langid.
 
     Reference lifecycle models/document.py:172-200 + models/sentence.py:
@@ -118,10 +111,9 @@ def sentence_base(
     never reach token analysis or insertion, so they are dropped here.
 
     Sentence boundary detection is length-gated (see
-    :func:`sentence_rows`); language detection defaults to the pure-JVM
-    single-pass struct (columns.langid_struct_col) - both have
-    bit-identical Arrow-UDF twins kept for tests and as the
-    spaCy/fasttext-style batch-kernel slots.
+    :func:`sentence_rows`); language detection is the pure-JVM
+    single-pass struct (columns.langid_struct_col), pinned against
+    kernels/langid.detect_language by the tests.
 
     Columns: document_id, sent_idx, text, cleaned, word_count, lang, score
     """
@@ -129,10 +121,7 @@ def sentence_base(
     # langid chain otherwise runs on the INPUT partitioning (one task
     # per parquet split until the dedup shuffle).  No-op at production
     # split counts; ~35% off the sf0.1 flagship locally.
-    sent = sentence_rows(
-        spread_input(docs, "document_id"),
-        use_udf_sentenize=use_udf_sentenize,
-    )
+    sent = sentence_rows(spread_input(docs, "document_id"))
     # inline(transform(array(clean), c -> struct(c, wc(c)))) evaluates
     # the (interpreted-HOF) cleaning tree ONCE per row: as plain
     # withColumns, the pushed-down word_count filter inlines the whole
@@ -149,22 +138,15 @@ def sentence_base(
     base = sent.select(
         "document_id", "sent_idx", "text", F.inline(cw)
     ).filter(F.col("word_count") >= 2)
-    if use_udf_langid:
-        base = base.withColumn("__ls", U.langid_udf(F.col("cleaned")))
-        base = base.withColumn("lang", F.col("__ls.lang")).withColumn(
-            "score", F.col("__ls.score")
-        ).drop("__ls")
-    else:
-        # inline(array(struct)) explodes the 1-element struct array into
-        # the lang/score columns through a Generate node - an optimizer
-        # barrier CollapseProject cannot cross, so the (interpreted-HOF)
-        # langid tree evaluates ONCE per row.  Plain field extraction
-        # (langid_cols) inlines the whole tree per referenced field -
-        # ~25% slower base materialization at 100k docs.
-        base = base.select(
-            "*", F.inline(F.array(C.langid_struct_col(F.col("cleaned"))))
-        )
-    return base
+    # inline(array(struct)) explodes the 1-element struct array into the
+    # lang/score columns through a Generate node - an optimizer barrier
+    # CollapseProject cannot cross, so the (interpreted-HOF) langid tree
+    # evaluates ONCE per row.  Plain field extraction (langid_cols)
+    # inlines the whole tree per referenced field - ~25% slower base
+    # materialization at 100k docs.
+    return base.select(
+        "*", F.inline(F.array(C.langid_struct_col(F.col("cleaned"))))
+    )
 
 
 def sentences(base: DataFrame) -> DataFrame:
@@ -295,7 +277,6 @@ NER_JOIN_THRESHOLD = 200
 
 def mention_rows(
     sentences_df: DataFrame,
-    use_udf_ner: bool = False,
     gazetteer: DataFrame | None = None,
     join_threshold: int = NER_JOIN_THRESHOLD,
     max_term_words: int | None = None,
@@ -306,9 +287,8 @@ def mention_rows(
     both derive from this frame so the match runs once.
 
     With ``gazetteer=None`` the demo dict (semantics.GAZETTEER) runs as
-    the pure-JVM contains-chain twin (columns.mentions_col); the
-    pandas-UDF kernel remains behind ``use_udf_ner`` as the twin the
-    tests pin row-for-row equal.
+    the pure-JVM contains chain (columns.mentions_col), which the tests
+    pin row-for-row against kernels/ner.extract_entities.
 
     A ``gazetteer`` DataFrame (term, ner_label) DISPATCHES BY SIZE -
     the reference runs full-model NER unconditionally per sentence
@@ -329,10 +309,6 @@ def mention_rows(
     plan-build time against a broadcast-scale dim - bounded metadata.
     """
     if gazetteer is not None:
-        if use_udf_ner:
-            raise ValueError(
-                "use_udf_ner applies only to the demo-dict kernel twin"
-            )
         n_terms = gazetteer.count()
         if n_terms > join_threshold:
             width = gazetteer_max_words(gazetteer)
@@ -354,11 +330,7 @@ def mention_rows(
         )
         matcher = C.mentions_col(F.col("cleaned"), terms)
     else:
-        matcher = (
-            U.ner_udf(F.col("cleaned"))
-            if use_udf_ner
-            else C.mentions_col(F.col("cleaned"))
-        )
+        matcher = C.mentions_col(F.col("cleaned"))
     m = sentences_df.select(
         "sentence_id", F.explode(matcher).alias("e")
     ).select("sentence_id", "e.label", "e.ner_label")
@@ -567,20 +539,26 @@ def has_text_edges(sentences_df: DataFrame) -> DataFrame:
     )
 
 
-def triples(
+def graph_frames(
     spark: SparkSession,
     docs: DataFrame,
-    use_udf_langid: bool = False,
     cache: bool = True,
     gazetteer: DataFrame | None = None,
-) -> DataFrame:
-    """The full graph as one (subj, pred, obj) DataFrame.
+) -> dict[str, DataFrame]:
+    """The graph build's one composition: the cut-points every graph
+    table derives from plus their six-branch edge union.  Returns
+    ``base``, ``sentences``, ``tokens`` (the three persisted cut-points),
+    ``mentions`` (the one NER pass, :func:`mention_rows`) and
+    ``triples`` (the (subj, pred, obj) union).  :func:`triples` and
+    materialize.build_all_tables both read it, so the graph and the
+    canonical tables share one plan.
 
-    ``cache=True`` persists the sentence base and canonical sentences:
-    the six edge branches would otherwise each re-run the sentenizer and
-    langid UDF lineage.  (At production scale the same cut-points are
-    materialized tables - see plans/materialize.py - so persisting here
-    mirrors the real execution shape, not just a local trick.)
+    ``cache=True`` persists the sentence base, the canonical sentences
+    and the token cut-point: the six edge branches would otherwise each
+    re-run the sentenizer and langid lineage.  (At production scale the
+    same cut-points are materialized tables - see plans/materialize.py -
+    so persisting here mirrors the real execution shape, not just a
+    local trick.)
 
     ``gazetteer`` (term, ner_label) selects the NER dictionary for the
     mentions branch; :func:`mention_rows` dispatches by dictionary size
@@ -588,7 +566,7 @@ def triples(
     n-gram width from the dict itself, so a production-scale dictionary
     is safe to pass straight through here.
     """
-    base = sentence_base(docs, use_udf_langid=use_udf_langid)
+    base = sentence_base(docs)
     if cache:
         # persist WITHOUT the 'cleaned' copy of the sentence: no branch
         # below reads it from base (sentences() drops-and-recomputes it
@@ -628,27 +606,41 @@ def triples(
             uuid5_col(F.lit("rawtoken"), "raw", "pos", "lang")
             .alias("__rid"),
         ).persist()
-    return (
+    edges = (
         part_of_edges(sents)
         .unionByName(has_text_edges(sents))
         .unionByName(occurs_in_edges(toks))
         .unionByName(normalizes_to_edges(toks))
-        .unionByName(
-            mention_edges(
-                sents,
-                None
-                if gazetteer is None
-                else mention_rows(sents, gazetteer=gazetteer),
-            )
-        )
-        .unionByName(links_to_edges(toks, spark))
     )
+    mentions = mention_rows(sents, gazetteer=gazetteer)
+    edges = edges.unionByName(mention_edges(sents, mentions)).unionByName(
+        links_to_edges(toks, spark)
+    )
+    return {
+        "base": base,
+        "sentences": sents,
+        "tokens": toks,
+        "mentions": mentions,
+        "triples": edges,
+    }
+
+
+def triples(
+    spark: SparkSession,
+    docs: DataFrame,
+    cache: bool = True,
+    gazetteer: DataFrame | None = None,
+) -> DataFrame:
+    """The full graph as one (subj, pred, obj) DataFrame - the
+    ``triples`` frame of :func:`graph_frames`."""
+    return graph_frames(spark, docs, cache=cache, gazetteer=gazetteer)[
+        "triples"
+    ]
 
 
 def triples_dedup(
     spark: SparkSession,
     files: DataFrame,
-    use_udf_langid: bool = False,
     cache: bool = True,
     gazetteer: DataFrame | None = None,
 ) -> DataFrame:
@@ -696,11 +688,7 @@ def triples_dedup(
         ["content_sha"]
     )
     skel = content_skeletons(
-        spark,
-        reps,
-        use_udf_langid=use_udf_langid,
-        cache=cache,
-        gazetteer=gazetteer,
+        spark, reps, cache=cache, gazetteer=gazetteer
     )
     sent_edges, occurs, mentions = expand_skeletons(
         skel, mapping, broadcast_mapping=bc_mapping
@@ -729,7 +717,6 @@ def files_mapping(files: DataFrame) -> DataFrame:
 def content_skeletons(
     spark: SparkSession,
     reps: DataFrame,
-    use_udf_langid: bool = False,
     cache: bool = True,
     gazetteer: DataFrame | None = None,
     tracked: list[DataFrame] | None = None,
@@ -754,7 +741,7 @@ def content_skeletons(
     docs = reps.select(
         F.col("content_sha").alias("document_id"), "content"
     )
-    base = sentence_base(docs, use_udf_langid=use_udf_langid)
+    base = sentence_base(docs)
     if cache:
         # no skeleton branch reads base.cleaned (sents recomputes it
         # post-dedup) - drop it from the cache, as in triples()

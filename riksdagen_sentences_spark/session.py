@@ -1,11 +1,16 @@
-"""SparkSession factory with scale-appropriate defaults.
+"""SparkSession factories with scale-appropriate defaults.
 
-Tuned for the sandbox (local[N], single JVM) but every setting is the one
-we would ship to a 1000-executor cluster: AQE on (runtime re-plan +
-skew-join splitting), Arrow enabled for the pandas-UDF kernels with a
-bounded batch size (the Arrow analog of the reference's 100k-char chunk
-bound, models/document.py:28), and shuffle partitions sized to the
-parallelism level instead of the 200 default.
+:func:`session_builder` carries the engine's PORTABLE settings - the
+ones we would ship to a 1000-executor cluster: AQE on (runtime re-plan +
+skew-join splitting), shuffled-hash joins and measured-size broadcast,
+Arrow enabled for the pandas-UDF kernels with a bounded batch size (the
+Arrow analog of the reference's 100k-char chunk bound,
+models/document.py:28).  The ``jobs/`` entry points build their session
+from it and take the master from ``spark-submit``.  :func:`get_spark`
+adds only the local settings on top: the ``local[N]`` master, shuffle
+partitions sized to the parallelism level instead of the 200 default,
+driver memory and the UI switch.  Tests, the benchmark and the jobs
+therefore run one configuration.
 """
 
 from __future__ import annotations
@@ -29,17 +34,12 @@ def _export_package_to_workers() -> None:
         )
 
 
-def get_spark(
-    parallelism: int | None = None,
-    app_name: str = "riksdagen-sentences-spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    p = parallelism or DEFAULT_CPUS
+def session_builder(app_name: str) -> SparkSession.Builder:
+    """A session builder with the engine's portable settings and no
+    master (see the module docstring)."""
     _export_package_to_workers()
-    builder = (
-        SparkSession.builder.master(f"local[{p}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or p))
+    return (
+        SparkSession.builder.appName(app_name)
         # Pin the session zone: temporal operators and their DuckDB
         # oracles must agree on wall-clock arithmetic regardless of the
         # host's zone (a DST-observing zone would shift TIMESTAMP casts
@@ -68,7 +68,21 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+    )
+
+
+def get_spark(
+    parallelism: int | None = None,
+    app_name: str = "riksdagen-sentences-spark",
+    shuffle_partitions: int | None = None,
+) -> SparkSession:
+    """Local session: :func:`session_builder` plus the local settings."""
+    p = parallelism or DEFAULT_CPUS
+    return (
+        session_builder(app_name)
+        .master(f"local[{p}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or p))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    return builder.getOrCreate()

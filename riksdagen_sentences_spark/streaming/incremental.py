@@ -2,10 +2,11 @@
 
 The reference is a resumable batch pipeline with no streaming (SURVEY
 §2.7); this is the Spark-native extension: new document files landing in
-a directory are picked up by a file-source stream and pushed through the
-IDENTICAL batch lineage via foreachBatch - one code path for batch and
-streaming (the deterministic ids make the merge idempotent: re-delivered
-documents produce identical rows).
+a directory are picked up by a file-source stream and applied to the
+content-addressed delta store (plans/delta.py) via foreachBatch - the
+same ``update_graph`` a batch caller runs, so batch and streaming share
+one code path (the deterministic batch ids make a replayed micro-batch
+a no-op: re-delivered files produce no new rows).
 
 Also provides the canonical event-time windowed aggregation with
 watermarking over the ``events`` table shape, demonstrating late-data
@@ -18,44 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.synth import FILES_SCHEMA
-
-
-def stream_files_to_graph(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """File-arrival stream -> triples, exactly-once via the stream
-    checkpoint + append mode.  Returns the StreamingQuery."""
-    from ..plans import pipeline as P
-
-    stream = (
-        spark.readStream.schema(FILES_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .parquet(input_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        docs = P.docs_from_files(batch_df)
-        triples = P.triples(batch_df.sparkSession, docs, cache=True)
-        (
-            triples.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(f"{out_dir}/triples")
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_files_to_delta_store(
@@ -75,11 +38,11 @@ def stream_files_to_delta_store(
 
     Exactly-once for real: ``foreachBatch`` is only at-least-once - on
     recovery Spark can re-invoke the function for a batch whose sink
-    work partially completed, which duplicates rows under the plain
-    append sink of :func:`stream_files_to_graph`.  Here the replayed
-    micro-batch hashes to the same deterministic delta batch id, so it
-    either short-circuits on the commit marker or overwrites exactly
-    its own partial directories - the store never double-counts.
+    work partially completed, which would duplicate rows under a plain
+    append sink.  Here the replayed micro-batch hashes to the same
+    deterministic delta batch id, so it either short-circuits on the
+    commit marker or overwrites exactly its own partial directories -
+    the store never double-counts.
     Returns the StreamingQuery."""
     from ..plans import delta as DL
 

@@ -157,7 +157,7 @@ def test_gazetteer_mismatch_raises_and_survives_compaction(spark, tmp_path, batc
     D.update_graph(spark, store, b2)  # pure reuse: no skeletons, no pin
 
     other = spark.createDataFrame(
-        [("zzz custom term", "ORG")], "label string, ner_label string"
+        [("zzz custom term", "ORG")], "term string, ner_label string"
     )
     with pytest.raises(ValueError, match="gazetteer mismatch"):
         D.update_graph(spark, store, b3, gazetteer=other)
@@ -171,6 +171,25 @@ def test_gazetteer_mismatch_raises_and_survives_compaction(spark, tmp_path, batc
     # same default dict still applies cleanly
     c = D.update_graph(spark, store, b3)
     assert c["files_new"] == 260
+
+
+def test_update_graph_with_gazetteer_dim(spark, tmp_path):
+    """The store accepts the (term, ner_label) gazetteer frame the NER
+    matcher reads: a batch built under ``dims.gazetteer`` and a reuse
+    batch pinned to it assemble the same graph as the from-scratch
+    dedup-aware build under that dictionary."""
+    from riksdagen_sentences_spark.sources import dims
+
+    b1 = files_table(spark, n_rows=80, seed=7).cache()
+    b2 = b1.withColumn("commit", F.concat(F.lit("r2-"), F.col("commit")))
+    store = str(tmp_path / "store")
+    gaz = dims.gazetteer(spark)
+    D.update_graph(spark, store, b1, gazetteer=gaz)
+    D.update_graph(spark, store, b2, gazetteer=gaz)
+    union = b1.unionByName(b2)
+    assert _rows(D.assemble_graph(spark, store)) == _rows(
+        P.triples_dedup(spark, union, gazetteer=gaz)
+    )
 
 
 def test_stream_feeds_delta_store(spark, tmp_path, batches):

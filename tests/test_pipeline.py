@@ -211,22 +211,15 @@ def test_linksto_edges_match_dictionary(spark, docs_df):
         assert by_id[e["subj"]] == (normalize_token(form), lang)
 
 
-def test_langid_udf_and_jvm_paths_identical(spark, docs_df):
-    """The Arrow-UDF langid variant and the JVM column default must
-    produce identical sentence sets."""
-    a = {
-        tuple(r)
-        for r in P.sentences(
-            P.sentence_base(docs_df, use_udf_langid=True)
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in P.sentences(
-            P.sentence_base(docs_df, use_udf_langid=False)
-        ).collect()
-    }
-    assert a == b
+def test_langid_jvm_matches_kernel(spark, docs_df):
+    """The JVM langid struct (columns.langid_struct_col) must give every
+    sentence-base row exactly the (lang, score) of the pure-Python
+    kernel on its cleaned text."""
+    base = P.sentence_base(docs_df)
+    rows = base.select("cleaned", "lang", "score").collect()
+    assert len(rows) > 0
+    for r in rows:
+        assert (r["lang"], r["score"]) == detect_language(r["cleaned"]), r
 
 
 def test_pr_harness_on_adversarial_corpus(spark):
@@ -250,19 +243,22 @@ def test_pr_harness_on_adversarial_corpus(spark):
     assert len(expected) > 1000
 
 
-def test_sentence_rows_gated_equals_udf(spark):
-    """The length-gated JVM sentenizer must equal the pandas-UDF kernel
+def test_sentence_rows_gated_matches_kernel(spark):
+    """The length-gated sentenizer must equal the pure-Python kernel
     row-for-row, including >100k-char documents (chunk-backtrack path)
     and every synth edge case (TOC lines, HTML fragments, dup
     sentences)."""
-    from riksdagen_sentences_spark.sources.synth import files_table
-
     files = files_table(spark, n_rows=400, seed=23, big_doc_every=31)
     docs = P.docs_from_files(files)
+    doc_rows = docs.collect()
+    assert max(len(r["content"]) for r in doc_rows) > S.CHUNK_SIZE
+    expected = sorted(
+        (r["document_id"], i, sent)
+        for r in doc_rows
+        for i, sent in enumerate(sentenize_document(r["content"]))
+    )
     gated = P.sentence_rows(docs)
-    udf = P.sentence_rows(docs, use_udf_sentenize=True)
-    assert gated.exceptAll(udf).count() == 0
-    assert udf.exceptAll(gated).count() == 0
+    assert sorted(map(tuple, gated.collect())) == expected
     # the gated plan ships only the >CHUNK_SIZE giants to Python: the
     # sentenize UDF appears in exactly one (filtered) branch.  (The
     # synth generator itself is a pandas UDF, so count the sentenizer,
@@ -271,22 +267,23 @@ def test_sentence_rows_gated_equals_udf(spark):
     assert plan.count("_sentenize_udf") == 1
 
 
-def test_mentions_jvm_twin_matches_udf_kernel(spark):
-    """Default JVM gazetteer matcher (columns.mentions_col) must be
-    row-for-row identical to the pandas-UDF kernel path on a corpus
-    that exercises both the query-engine and Swedish gazetteer terms."""
-    from riksdagen_sentences_spark.sources.synth import files_table
-
+def test_mentions_jvm_matches_kernel(spark):
+    """The JVM gazetteer matcher (columns.mentions_col) must be
+    row-for-row identical to the pure-Python kernel on a corpus that
+    exercises both the query-engine and Swedish gazetteer terms."""
     docs = P.docs_from_files(files_table(spark, n_rows=400, seed=11))
     sents = P.sentences(P.sentence_base(docs)).persist()
-    jvm = sorted(
-        map(tuple, P.mention_rows(sents).collect())
+    rows = sents.select("sentence_id", "cleaned").collect()
+    expected = sorted(
+        {
+            (r["sentence_id"], label, ner_label)
+            for r in rows
+            for label, ner_label in extract_entities(r["cleaned"])
+        }
     )
-    udf = sorted(
-        map(tuple, P.mention_rows(sents, use_udf_ner=True).collect())
-    )
+    jvm = sorted(map(tuple, P.mention_rows(sents).collect()))
     sents.unpersist()
-    assert jvm == udf
+    assert jvm == expected
     assert len(jvm) > 0
 
 

@@ -318,6 +318,30 @@ def test_learn_bpe_back_to_back_merges(spark):
     assert (rules[1].w1, rules[1].w2) == ("ab", "ab")
 
 
+def test_learn_bpe_degenerate_corpus(spark):
+    """A corpus with no adjacent symbol pair (empty, or only 1-char
+    words) yields an empty rule table with the rule schema; one that
+    runs out of pairs before ``n_merges`` stops early."""
+    from riksdagen_sentences_spark.operators.bpe import learn_bpe
+
+    schema = "doc_id long, text string"
+    rule_types = [
+        ("round", "int"),
+        ("w1", "string"),
+        ("w2", "string"),
+        ("merged", "string"),
+        ("freq", "bigint"),
+    ]
+    for rows in ([], [(1, "a b c a")]):
+        rules = learn_bpe(spark.createDataFrame(rows, schema), n_merges=3)
+        assert rules.dtypes == rule_types
+        assert rules.count() == 0
+    # "ab" merges once; then every word is a single symbol
+    docs = spark.createDataFrame([(1, "ab ab")], schema)
+    rules = learn_bpe(docs, n_merges=3).collect()
+    assert [(r.round, r.w1, r.w2, r.freq) for r in rules] == [(1, "a", "b", 2)]
+
+
 # ---------------------------------------------------------------------------
 # streaming HLL replay
 # ---------------------------------------------------------------------------

@@ -4,37 +4,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from riksdagen_sentences_spark.operators import multimodal as MM
-from riksdagen_sentences_spark.plans import pipeline as P
-from riksdagen_sentences_spark.sources.synth import files_table
 from riksdagen_sentences_spark.streaming.incremental import (
-    stream_files_to_graph,
     windowed_event_counts,
 )
-
-
-def test_stream_files_to_graph_matches_batch(spark, tmp_path):
-    indir = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    files = files_table(spark, n_rows=60, seed=42)
-    files.repartition(4).write.mode("overwrite").parquet(indir)
-
-    q = stream_files_to_graph(spark, indir, out, ckpt, available_now=True)
-    q.awaitTermination(240)
-
-    got = spark.read.parquet(f"{out}/triples").drop("batch_id")
-    batch = P.triples(spark, P.docs_from_files(files), cache=True)
-    # streaming microbatches dedup per batch; compare distinct triple sets
-    a = {tuple(r) for r in got.dropDuplicates(["subj", "pred", "obj"]).collect()}
-    b = {tuple(r) for r in batch.collect()}
-    assert a == b
-    assert len(a) > 0
-
-    # restart with same checkpoint: no new input -> no duplicate append
-    n_before = spark.read.parquet(f"{out}/triples").count()
-    q2 = stream_files_to_graph(spark, indir, out, ckpt, available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(f"{out}/triples").count() == n_before
 
 
 def test_windowed_event_counts_batch_semantics(spark):

@@ -7,7 +7,13 @@ Usage: python tools/parity.py [sf_dir] [name ...]
 import os
 import sys
 
-os.environ.setdefault("PYTHONPATH", "/root/repo")
+# the tree this file lives in - never a fixed checkout - is the one
+# checked, for the driver and (via PYTHONPATH) for the Python workers
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
+sys.path.insert(0, ROOT)
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
@@ -34,11 +40,10 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, "/root/repo")
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", os.path.join(ROOT, "__spark_entry__.py")
     )
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
